@@ -874,13 +874,16 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             a.hint("merge")
             .join(b, "gh")
             .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter (exact, output-preserving at ANY scale): for a
-            # pair with gram-set sizes n_a, n_b and any overlap c,
-            # jaccard = c/(n_a+n_b-c) <= min(n)/max(n), so a pair with
-            # 10*min(n) < 3*max(n) can never reach the 0.3 threshold and
+            # length filter: for a pair with gram-set sizes n_a, n_b and
+            # any overlap c, jaccard = c/(n_a+n_b-c) <= min(n)/max(n), so
+            # a pair with 10*min(n) < 3*max(n) has true jaccard < 0.3 and
             # every one of its instances (n_src/n_dst are pair constants)
-            # is dropped BEFORE the pair exchange — integer arithmetic,
-            # no float boundary (guide §2.3: shuffle fewer rows).
+            # is dropped BEFORE the pair exchange — integer arithmetic
+            # (guide §2.3: shuffle fewer rows). Exact only while every doc
+            # keeps fewer than 200k grams: the predicate below rounds
+            # jaccard HALF_UP to 6 places, so it admits true jaccard
+            # >= 0.2999995, and a dropped pair's min(n)/max(n) can reach
+            # that only if max(n) >= 1/(10 * 5e-7) = 200,000.
             .where(
                 F.least("a.n", "b.n") * F.lit(10)
                 >= F.greatest("a.n", "b.n") * F.lit(3)
@@ -916,8 +919,10 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached_frame(spark, sf_dir, "ngram_pairs", build_pairs)
 
 
-_NGRAM_SQL = f"""
-WITH grams0 AS (
+# The DuckDB twins of the n-gram family share one CTE list, composed
+# explicitly: the gram pairs (_GRAM_CTES), the edge closure on top of them
+# (_CC_CTES), and each query's final SELECT.
+_GRAM_CTES = f"""grams0 AS (
     SELECT DISTINCT doc_id, ng
     FROM (
         SELECT d.doc_id,
@@ -944,7 +949,10 @@ WITH grams0 AS (
     WHERE x.doc_id < y.doc_id
     GROUP BY 1, 2
 )
-SELECT src, dst, n_common,
+"""
+
+_NGRAM_SQL = f"""
+WITH {_GRAM_CTES}SELECT src, dst, n_common,
        round(n_common / (sx.n + sy.n - n_common), 6) AS jaccard
 FROM inter
 JOIN sizes sx ON sx.doc_id = src
@@ -973,17 +981,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached_frame(spark, sf_dir, "neardup_cc", build_cc)
 
 
-_CC_SQL = _NGRAM_SQL.replace(
-    "WITH grams0 AS", "WITH RECURSIVE grams0 AS", 1
-).replace(
-    """SELECT src, dst, n_common,
-       round(n_common / (sx.n + sy.n - n_common), 6) AS jaccard
-FROM inter
-JOIN sizes sx ON sx.doc_id = src
-JOIN sizes sy ON sy.doc_id = dst
-WHERE round(n_common / (sx.n + sy.n - n_common), 6) >= 0.3
-""",
-    """, e AS (
+_CC_CTES = _GRAM_CTES + """, e AS (
     SELECT src, dst FROM inter
     JOIN sizes sx ON sx.doc_id = src
     JOIN sizes sy ON sy.doc_id = dst
@@ -997,9 +995,11 @@ WHERE round(n_common / (sx.n + sy.n - n_common), 6) >= 0.3
     UNION
     SELECT reach.v, sym.v AS r FROM reach JOIN sym ON sym.u = reach.r
 )
-SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v ORDER BY doc_id
-""",
-)
+"""
+
+_CC_SQL = f"""
+WITH RECURSIVE {_CC_CTES}SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v ORDER BY doc_id
+"""
 
 
 def q_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1043,10 +1043,8 @@ def q_dedup_reduction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SURVIVORS_CORE = _CC_SQL.replace(
-    """SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v ORDER BY doc_id
-""",
-    """, cc AS (
+_SURVIVORS_CORE = f"""
+WITH RECURSIVE {_CC_CTES}, cc AS (
     SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v
 )
 SELECT d.doc_id,
@@ -1054,14 +1052,7 @@ SELECT d.doc_id,
        (coalesce(cc.cluster_id, d.doc_id) = d.doc_id) AS keep,
        d.n_chars
 FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
-""",
-)
-
-# exact-string surgery guards (ADVICE r5): if the donor SQL tails ever
-# drift, .replace() silently no-ops and the derived oracles become the
-# donor query with the wrong columns — fail at import instead.
-assert _CC_SQL != _NGRAM_SQL and "RECURSIVE" in _CC_SQL
-assert _SURVIVORS_CORE != _CC_SQL and "LEFT JOIN cc" in _SURVIVORS_CORE
+"""
 
 _REDUCTION_SQL = f"""
 WITH s AS ({_SURVIVORS_CORE})

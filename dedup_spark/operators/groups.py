@@ -37,7 +37,7 @@ from .lsh import salted_pairs  # the ONE pair-gen ladder in the repo
 def group_keys(signatures: DataFrame) -> DataFrame:
     """(file_id, g1, g2): the 128-bit full-signature group key, computed
     PER ROW with no shuffle — the narrow building block shared by
-    ``sketch_groups`` (batch) and the incremental fold's group-delta state
+    ``sketch_groups`` and the incremental fold's group-delta state
     (streaming.py), which folds per-batch key aggregates instead of
     re-windowing the cumulative signature table. Files with no shingles
     are excluded (they never participate in matching)."""
@@ -71,11 +71,11 @@ def with_groups(signatures: DataFrame) -> DataFrame:
     Fused alternative to ``sketch_groups`` + a join-back: the window runs
     over the full signature rows, so the representative FILTER
     (``file_id = rep``) needs no second exchange of the wide table — the
-    no-workdir pipeline persists this frame once and derives signatures,
-    groups, and rep_sigs as projections. Zero-shingle files get a unique
-    per-file group key (they never participate in matching, and a shared
-    empty-signature key would otherwise weld all empty files into one
-    bogus group).
+    pipeline persists (or checkpoints) this frame once and derives
+    signatures, groups, and rep_sigs as projections. Zero-shingle files
+    get a unique per-file group key (they never participate in matching,
+    and a shared empty-signature key would otherwise weld all empty files
+    into one bogus group).
     """
     empty = F.col("n_shingles") == 0
     keyed = signatures.withColumn(
@@ -91,10 +91,6 @@ def with_groups(signatures: DataFrame) -> DataFrame:
     return keyed.withColumn("rep", F.min("file_id").over(w)).withColumn(
         "group_size", F.count("*").over(w)
     )
-
-
-def representative_ids(groups: DataFrame) -> DataFrame:
-    return groups.where(F.col("file_id") == F.col("rep")).select("file_id")
 
 
 def group_star_pairs(groups: DataFrame) -> DataFrame:

@@ -276,16 +276,9 @@ def compute_signatures_direct(spark, corpus_path: str, cfg: DedupConfig,
     _LAST_FEED_ACCS = {"wall_s": wall_acc, "cpu_s": cpu_acc}
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import json
-        import os
         import time
 
         import pyarrow.parquet as pq
-
-        # env-gated worker-side profiling (scaling forensics): one jsonl
-        # line per bucket with wall + process-CPU, written outside the
-        # data path. Zero overhead when SIG_PROF is unset.
-        prof_dir = os.environ.get("SIG_PROF")
 
         a = np.asarray(a_list, dtype=np.int64)
         b = np.asarray(b_list, dtype=np.int64)
@@ -312,20 +305,8 @@ def compute_signatures_direct(spark, corpus_path: str, cfg: DedupConfig,
                         yield _sig_record_batch(
                             ids, col.to_pylist(), a, b, cfg
                         )
-                dw = time.time() - t0w
-                dc = time.process_time() - t0c
-                wall_acc.add(dw)
-                cpu_acc.add(dc)
-                if prof_dir:
-                    line = json.dumps({
-                        "bucket": bucket_id, "pid": os.getpid(),
-                        "wall": round(dw, 3), "cpu": round(dc, 3),
-                        "end": round(time.time(), 3),
-                    })
-                    os.makedirs(prof_dir, exist_ok=True)
-                    with open(os.path.join(
-                            prof_dir, f"{os.getpid()}.jsonl"), "a") as fh:
-                        fh.write(line + "\n")
+                wall_acc.add(time.time() - t0w)
+                cpu_acc.add(time.process_time() - t0c)
 
     # exactly ONE bucket per task, with NO shuffle and NO sampling job:
     # spark.range(n, numPartitions=n) is a leaf with one id per partition

@@ -58,20 +58,10 @@ def shingle_sets(corpus: DataFrame, cfg: DedupConfig,
 
 def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                  shingles: DataFrame, cfg: DedupConfig,
-                 two_phase: bool | None = None,
-                 broadcast_pairs: bool = False) -> DataFrame:
+                 two_phase: bool | None = None) -> DataFrame:
     """pairs (src,dst) → verified edges with exact Jaccard.
 
     Returns (src, dst, hamming, jaccard, verified).
-
-    ``broadcast_pairs`` pins the pair side of the sketch joins as the
-    broadcast build side — the choice Catalyst's statistics make anyway
-    once the signature cache is materialized. Callers pass it for
-    measured-small corpora so the physical plan is IDENTICAL whether it
-    is frozen before or after the cache populates (what makes the
-    pipeline's construct-during-bulk overlap safe); it must stay False
-    when candidate volume is unbounded (pairs at 100 TB scale are not a
-    driver-sized relation).
 
     Size-tiered shuffle (the 100 TB lever on the verify stage): when the
     hamming gate is active (``simhash_hamming_max < 64``) the pair rows
@@ -83,8 +73,6 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     Jaccard) two narrow extra joins buy nothing, so the single-phase plan
     is kept; ``two_phase`` overrides the auto choice for A/B measurement.
     """
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
     if two_phase is None:
         two_phase = cfg.simhash_hamming_max < 64
     # simhash and the shingle set come from the same signature row; in the

@@ -1,7 +1,8 @@
 """End-to-end near-dup pipeline with checkpoint/resume + per-stage metrics.
 
 Stage DAG (north_star):
-  corpus → signatures → candidates (LSH) → edges (verify) → clusters (CC)
+  corpus → sig_groups (signatures + exact-sketch groups)
+         → candidates (LSH) → edges_rep (verify) → clusters (CC)
 
 Every stage can checkpoint to ``workdir/<stage>`` (parquet + _SUCCESS);
 ``resume=True`` skips any stage whose checkpoint exists — the reference's
@@ -18,50 +19,13 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-
-# Corpora whose driver-measured parquet footprint is at or under this are
-# "tail-latency" runs: the pipeline overlaps the cache-materialization
-# count with tail-plan construction and pins the pair-side broadcast +
-# drops the mega-bucket pre-filter job (all output-identical plan-shape
-# choices). Compressed bytes, so ~2 GB ≈ a few tens of GB of text — well
-# inside what a bounded candidate set can broadcast; everything larger
-# keeps the strict stats-driven 100 TB plan shape.
-SMALL_TAIL_MAX_BYTES = 2 << 30
-
-
-def _dir_parquet_bytes(path: str) -> int:
-    """Committed parquet bytes under a LOCAL directory — driver-side
-    metadata only, no Spark job. Returns 0 when the path is not locally
-    walkable (object-store URI, missing dir): ``os.walk`` yields nothing
-    there, and callers MUST treat 0 as unmeasured-therefore-LARGE — a
-    100 TB ``s3://`` corpus must never classify as a small-tail run just
-    because the driver can't stat it."""
-    total = 0
-    for dirpath, _, names in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(dirpath, n))
-            for n in names if n.endswith(".parquet")
-        )
-    return total
-
-
-def _small_tail_gate(corpus_path: str | None, cfg: DedupConfig) -> bool:
-    """True only for a POSITIVELY-measured small local corpus with the
-    LCS gate off. No path, an unwalkable path (object-store URI), or an
-    empty measurement all mean unmeasured → strict stats-driven planning;
-    min_lcs > 0 keeps the strict path because the LCS stage joins the
-    corpus itself, a stats-sensitive choice the small-tail overlap would
-    otherwise freeze against unpopulated estimates."""
-    if corpus_path is None or cfg.min_lcs > 0:
-        return False
-    return 0 < _dir_parquet_bytes(corpus_path) <= SMALL_TAIL_MAX_BYTES
 
 # Bump whenever a checkpointed stage's SEMANTICS change (round 2: stages
 # moved from member-level to representative-level frames). Folded into the
@@ -205,6 +169,17 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full near-dup pipeline.
 
+    One plan whatever the arguments. Stages, in order:
+      sig_groups   signature rows + exact-sketch group columns (one wide
+                   exchange); persisted, then counted in one job
+      candidates   representative-level LSH candidate pairs
+      edges_rep    representative-level verified/rejected edges
+      edges_lcs    member-level LCS-gated edges (only when min_lcs > 0)
+      clusters     (file_id, cluster_id) for every corpus row
+    With ``workdir`` every stage checkpoints to ``workdir/<stage>`` and
+    ``resume=True`` reads a checkpoint back instead of rebuilding it;
+    without one, multi-consumer stages are persisted.
+
     ``corpus_path`` (optional): parquet directory backing ``corpus``.
     When given, the signature stage uses the Python-native columnar feed
     (``compute_signatures_direct`` — workers read their own row-group
@@ -225,6 +200,9 @@ def run_pipeline(
       clusters     (file_id, cluster_id) for every corpus row
     """
     from .operators.cluster import cluster_assignments
+    from .operators.groups import (
+        expand_group_edges, group_star_pairs, with_groups,
+    )
     from .operators.lsh import candidate_pairs, dropped_bucket_metrics
     from .operators.signatures import (
         compute_signatures, compute_signatures_direct,
@@ -234,8 +212,6 @@ def run_pipeline(
     cfg = cfg or DedupConfig()
     spark = corpus.sparkSession
     ckpt = Checkpointer(spark, workdir, config_fingerprint(cfg))
-
-    from pyspark import StorageLevel
 
     def stage(name: str, build, persist: bool = True):
         t0 = time.time()
@@ -254,18 +230,8 @@ def run_pipeline(
         # counts): the persisted signature frame is bounded by the sketch
         # caps (~10 KB/row whatever the file sizes), so it always fits the
         # heap, and the serialized-batch disk round-trip per tail scan was
-        # pure overhead. The env knob exists for memory-tight deployments.
-        lvl = getattr(StorageLevel,
-                      os.environ.get("DEDUP_PERSIST_LEVEL",
-                                     "MEMORY_AND_DISK_DESER"))
-        return df.persist(lvl)
-
-    from .operators.groups import (
-        expand_group_edges, group_star_pairs, representative_ids,
-        sketch_groups, with_groups,
-    )
-
-    _GROUP_COLS = ["g1", "g2", "rep", "group_size"]
+        # pure overhead.
+        return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
 
     def _signatures():
         if corpus_path is not None:
@@ -279,76 +245,34 @@ def run_pipeline(
     # group contraction (operators/groups.py — the 100 TB lever against
     # exact-copy-heavy corpora) makes LSH + verify run on one
     # representative per identical-signature group; candidate coverage and
-    # pair jaccard are provably unchanged.
-    if workdir:
-        # checkpoint layout: narrow 'groups' stage + join-back (each stage
-        # readable/resumable on its own)
-        signatures = stage("signatures", _signatures)
-        groups = stage("groups", lambda: sketch_groups(signatures))
-        rep_sigs = signatures.join(representative_ids(groups), "file_id")
-        verify_side = rep_sigs
-        n_sigs = None  # not measured on this path: pre-filter stays on
-        small_tail = False
-        count_thread = None
-    else:
-        # fused plan: ONE wide exchange (window over the full signature
-        # rows) yields signatures, groups, and rep_sigs as projections of
-        # a single persisted frame — the narrow-window + wide-join layout
-        # costs an extra exchange of the signature table for nothing when
-        # no checkpoint needs the narrow frame on disk
-        sig_groups = stage(
-            "sig_groups", lambda: with_groups(_signatures())
-        )
-        # Materialize the persist NOW, in one dedicated job: the first
-        # downstream action otherwise races its non-AQE broadcast-subquery
-        # futures (LSH over-cap key scan) against its own main job, and
-        # two concurrent jobs pulling an unpopulated cache compute the
-        # signature kernel twice while thrashing the executor cores
-        # (event-log measured: two overlapping ~10 s jobs at local[8]).
-        # count() scans every partition fully, unlike a limit probe, so
-        # the cache is complete before any consumer plans against it.
-        # (A separate narrow "core" cache without the shingle arrays was
-        # measured too: the extra cache-build pass cost more than the
-        # narrower tail scans saved.)
-        #
-        # Measured-SMALL corpora (driver-side parquet footprint — known
-        # before any job) additionally OVERLAP the count with the tail's
-        # DataFrame construction: ~1-1.4 s of py4j round-trips + per-frame
-        # analysis otherwise sit between the bulk job and the first tail
-        # job (event-log gap), at every parallelism level. The overlap is
-        # safe only because the one stats-sensitive physical choice in
-        # the tail — the pair side of the verify joins — is PINNED by an
-        # explicit broadcast hint on this path, so the edges_rep plan
-        # frozen at persist-registration (against the not-yet-populated
-        # cache) is identical to the plan the post-count statistics would
-        # pick. Large or UNMEASURED corpora keep the strict count-first
-        # sequencing and fully stats-driven planning (see
-        # _small_tail_gate for the full opt-in conditions).
-        small_tail = _small_tail_gate(corpus_path, cfg)
-        count_thread = None
-        if small_tail:
-            count_thread = threading.Thread(target=sig_groups.count)
-            count_thread.start()
-            n_sigs = None  # unknown during overlapped construction
-        else:
-            n_sigs = sig_groups.count()
-        signatures = sig_groups.drop(*_GROUP_COLS)
-        groups = sig_groups.select("file_id", *_GROUP_COLS)
-        rep_sigs = sig_groups.where(
-            F.col("file_id") == F.col("rep")
-        ).drop(*_GROUP_COLS)
-        verify_side = rep_sigs
-    shingles = verify_side.select("file_id", "shingles")
-    # the cache-materialization count doubles as the measured row count
-    # that cost-gates the mega-bucket pre-filter (small measured inputs
-    # drop its dedicated job + broadcast future; output identical); on
-    # the overlapped path the same gate decides from corpus bytes
+    # pair jaccard are provably unchanged. ONE wide exchange (window over
+    # the full signature rows) yields signatures, groups, and rep_sigs as
+    # projections of a single stage frame.
+    _GROUP_COLS = ["g1", "g2", "rep", "group_size"]
+    sig_groups = stage("sig_groups", lambda: with_groups(_signatures()))
+    # Materialize the stage NOW, in one dedicated job: the first
+    # downstream action otherwise races its non-AQE broadcast-subquery
+    # futures (LSH over-cap key scan) against its own main job, and
+    # two concurrent jobs pulling an unpopulated cache compute the
+    # signature kernel twice while thrashing the executor cores
+    # (event-log measured: two overlapping ~10 s jobs at local[8]).
+    # count() scans every partition fully, unlike a limit probe, so
+    # the cache is complete before any consumer plans against it.
+    # (A separate narrow "core" cache without the shingle arrays was
+    # measured too: the extra cache-build pass cost more than the
+    # narrower tail scans saved.) The count doubles as the measured row
+    # count that cost-gates the mega-bucket pre-filter (small measured
+    # inputs drop its dedicated job + broadcast future; output identical).
+    n_sigs = sig_groups.count()
+    signatures = sig_groups.drop(*_GROUP_COLS)
+    groups = sig_groups.select("file_id", *_GROUP_COLS)
+    rep_sigs = sig_groups.where(
+        F.col("file_id") == F.col("rep")
+    ).drop(*_GROUP_COLS)
+    shingles = rep_sigs.select("file_id", "shingles")
     pairs = stage(
         "candidates",
-        lambda: candidate_pairs(
-            rep_sigs, cfg, n_rows=n_sigs,
-            prefilter=False if small_tail else None,
-        ),
+        lambda: candidate_pairs(rep_sigs, cfg, n_rows=n_sigs),
         persist=False,
     )
     # stage name is "edges_rep", NOT round-1's "edges": the frame holds
@@ -357,8 +281,7 @@ def run_pipeline(
     # whose non-representative endpoints vanish in the expansion join.
     edges_rep = stage(
         "edges_rep",
-        lambda: verify_pairs(pairs, verify_side, shingles, cfg,
-                             broadcast_pairs=small_tail),
+        lambda: verify_pairs(pairs, rep_sigs, shingles, cfg),
     )
 
     if cfg.min_lcs > 0:
@@ -387,27 +310,16 @@ def run_pipeline(
     # cluster over ids from the signature-derived frames (one row per
     # corpus row by construction of the kernel) — re-scanning the corpus
     # parquet for one column costs a listing + footer + scan pass per run.
-    # with_groups keeps zero-shingle files (unique group keys), so the
-    # no-workdir 'groups' projection is a complete id universe; the
-    # checkpointed sketch_groups frame excludes them, so the workdir path
-    # reads ids off the signatures checkpoint instead.
-    id_frame = signatures if workdir else groups
+    # with_groups keeps zero-shingle files (unique group keys), so
+    # 'groups' is a complete id universe.
     # star pairs (rep=group-min < member) and verified rep edges
     # (least/greatest distinct, cross-group) are canonical and disjoint by
     # construction, so CC may skip its canonicalization exchange; the
     # LCS-gated member-level set is not proven so and keeps the default.
-    if count_thread is not None:
-        # overlapped path: the cache MUST be fully populated before the
-        # first tail action runs (the clusters stage below) — an
-        # unpopulated multi-consumer cache double-computes the kernel
-        # under concurrent broadcast futures. (If construction above
-        # raises first, the thread just finishes its count on its own —
-        # no state to clean up.)
-        count_thread.join()
     clusters = stage(
         "clusters",
         lambda: cluster_assignments(
-            id_frame.select("file_id"), cluster_input,
+            groups.select("file_id"), cluster_input,
             edges_canonical=cfg.min_lcs <= 0
         ),
     )

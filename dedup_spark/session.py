@@ -60,18 +60,23 @@ def _local_dir() -> str:
         return os.environ.get("SPARK_LOCAL_DIRS", "/tmp")
 
 
-def _fd_safe_partitions(cores: int) -> int:
-    """Largest per-shuffle partition count the bypass writer can use with
-    every core running a map task at once, against the process soft FD
-    limit (4096 kept back for parquet footers, sockets, jars, spill
-    files)."""
+def _bypass_merge_threshold(cores: int) -> int:
+    """``spark.shuffle.sort.bypassMergeThreshold``: cores*32 floored at
+    Spark's default 200, then capped by the widest per-shuffle partition
+    count the bypass writer can use with every core running a map task at
+    once against the process soft FD limit (4096 kept back for parquet
+    footers, sockets, jars, spill files). An unlimited soft limit
+    (``RLIM_INFINITY``) caps nothing."""
+    want = max(200, cores * 32)
     try:
         import resource
 
         soft = resource.getrlimit(resource.RLIMIT_NOFILE)[0]
+        if soft == resource.RLIM_INFINITY:
+            return want
     except Exception:
         soft = 1024
-    return max(1, (soft - 4096) // max(1, cores))
+    return min(want, max(1, (soft - 4096) // max(1, cores)))
 
 
 def get_spark(app: str = "dedup_spark", cores: int | None = None,
@@ -130,7 +135,7 @@ def get_spark(app: str = "dedup_spark", cores: int | None = None,
         # Wider exchanges than this fall back to the serialized-sort
         # writer — batched files are the right trade there.
         .config("spark.shuffle.sort.bypassMergeThreshold",
-                str(max(200, min(cores * 32, _fd_safe_partitions(cores)))))
+                str(_bypass_merge_threshold(cores)))
         # one BLAS/OMP thread per Python worker: N workers x N BLAS threads
         # oversubscribes quadratically on wide executors
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

@@ -1,6 +1,7 @@
 """Tests for text-analysis, similarity-search, and multimodal operators."""
 
 import math
+import resource
 
 import pytest
 from pyspark.sql import functions as F
@@ -228,6 +229,19 @@ def test_config_band_invariant_raises():
 
     with pytest.raises(ValueError, match="num_perm"):
         DedupConfig(bands=64, band_rows=2, num_perm=64).rows_per_band
+
+
+@pytest.mark.parametrize("soft, cores, want", [
+    (resource.RLIM_INFINITY, 4, 200),    # unlimited: the 200 floor holds
+    (resource.RLIM_INFINITY, 32, 1024),  # unlimited: cores*32, no collapse
+    (7000, 32, 90),                      # the FD-safe bound caps the floor
+    (20000, 4, 200),
+])
+def test_bypass_merge_threshold_fd_limit(monkeypatch, soft, cores, want):
+    from dedup_spark.session import _bypass_merge_threshold
+
+    monkeypatch.setattr(resource, "getrlimit", lambda _: (soft, soft))
+    assert _bypass_merge_threshold(cores) == want
 
 
 def test_passage_segments_and_dedup(spark):
